@@ -2068,8 +2068,8 @@ def incremental_bitmap_distinct_merge(
 
 def variant_event_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 VARIANT-type surface (VERDICT r11 item 2 — prototyped for
-    engine parity BEFORE registering; ``tools/prototype_variant.py``
-    measured an exact MATCH): build a NESTED json document per event from
+    engine parity BEFORE registering; the prototype's exact MATCH vs
+    DuckDB JSON is recorded in SURVEY.md's VARIANT row): build a NESTED json document per event from
     existing columns (object + array — identical string on both engines),
     parse it into a true VARIANT with ``parse_json``, and extract typed
     values through every path shape the type supports — a flat key

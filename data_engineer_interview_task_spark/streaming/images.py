@@ -20,6 +20,7 @@ forced batch replay.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +28,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..plans import prep_session
 from ..sources import read_table
-from .util import bump_new_files_mtime, snapshot_parquet_files
+from .util import bump_new_files_mtime, snapshot_parquet_files, staged_custom
 
 DOCS_SCHEMA = StructType(
     [
@@ -103,6 +104,13 @@ def read_dhash_index(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(f"{index_dir}/b*")
 
 
+#: staged feed dir -> lock held while a maintenance pass runs against
+#: that feed's shared checkpoint + index (two concurrent passes on one
+#: checkpoint would fail or double-append). ``dict.setdefault`` is
+#: atomic, so the registry needs no lock of its own.
+_INDEX_LOCKS: dict[str, threading.Lock] = {}
+
+
 def run_dhash_index_maintenance_once(
     spark: SparkSession, sf_dir: str, work_dir: str, n_files: int = 3
 ) -> DataFrame:
@@ -125,12 +133,11 @@ def run_dhash_index_maintenance_once(
     (the driver's correctness gate) still exercises the full loop, and
     the old per-call append bug (repeats re-fed the corpus as new
     batches and returned duplicated rows when callers shared a
-    work_dir) is gone — pinned by the r13 idempotence test. The
-    ``work_dir`` parameter is kept for the harness signature contract
-    (unused)."""
+    work_dir) is gone — pinned by the r13 idempotence test. Concurrent
+    calls serialize their passes on a per-feed lock, since they share
+    one checkpoint. The ``work_dir`` parameter is kept for the harness
+    signature contract (unused)."""
     del work_dir
-    from .util import staged_custom
-
     src = staged_custom(
         spark,
         sf_dir,
@@ -139,5 +146,6 @@ def run_dhash_index_maintenance_once(
         input_table="documents",
     )
     index_dir = f"{src}_index"
-    run_dhash_index_stream(spark, src, index_dir, f"{src}_ckpt")
+    with _INDEX_LOCKS.setdefault(src, threading.Lock()):
+        run_dhash_index_stream(spark, src, index_dir, f"{src}_ckpt")
     return read_dhash_index(spark, index_dir)

@@ -6,18 +6,12 @@ condition bound that state, which is what lets it run forever.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import prep_session
 from .weekly import EVENTS_SCHEMA
-from .util import (
-    drain_memory_sink,
-    staged_events,
-    state_partitions,
-)
+from .util import run_available_now, staged_events
 
 
 def click_purchase_stream_join(
@@ -71,32 +65,14 @@ def click_purchase_stream_join(
 def run_click_purchase_join_once(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
-    """availableNow harness for the stream-stream join. Runs under the
-    volume-derived state-store partition count (r13 — the inner join
-    keeps the same four state instances per partition as the outer
-    forms, so it pays the identical per-partition commit cost the r12
-    profile measured; A/B at sf0.1: 7.9s at the session's 32
+    """availableNow harness for the stream-stream join, under the
+    state-partition window (A/B at sf0.1: 7.9s at the session's 32
     partitions → 2.2s sized to state volume, identical rows)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_ssj_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            click_purchase_stream_join(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_available_now(
+        spark, click_purchase_stream_join(spark, src), work_dir, "append", src
+    )
 
 
 def click_purchase_left_join(
@@ -155,21 +131,7 @@ def click_purchase_left_join(
     )
 
 
-# State-store partition sizing for the join harnesses: an outer
-# stream-stream join maintains FOUR state stores per shuffle partition
-# (keyToNumValues + keyWithIndexToValue per side), and every micro-batch
-# pays each instance's snapshot/commit regardless of row count — at the
-# session's 32 shuffle partitions that is 128 commits per batch, ~3.5s
-# of fixed cost (measured at sf0.1: batches with FOUR input rows cost
-# the same as the 200k-row bulk batch). util.state_partitions derives
-# the count from the staged source volume (floor 2 at bench scale,
-# env-overridable, scaling with input at production volumes) — sized to
-# state volume, never to the batch side's CPU (VERDICT r5 item 6
-# profile; SCALE.md streaming block; r12 opt A/B in util.py; r13
-# volume-derived default per VERDICT r12 item 1).
-
-
-def _run_outer_join_once(spark, sf_dir, work_dir, builder, prefix) -> DataFrame:
+def _run_outer_join_once(spark, sf_dir, work_dir, builder) -> DataFrame:
     """Shared availableNow harness for the OUTER stream-stream joins,
     making the emission COMPLETE and therefore equal to the batch join
     (the oracle):
@@ -194,26 +156,9 @@ def _run_outer_join_once(spark, sf_dir, work_dir, builder, prefix) -> DataFrame:
     real-row set with one fewer micro-batch and one fewer tiny write."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "flushed")
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    # conf window AFTER the last read_table: the checkpoint is created
-    # fresh each run, so the reduced partition count binds this query only
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            builder(spark, src, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink).filter(F.col("user_id") >= 0)
+    stream = builder(spark, src, max_files_per_trigger=1)
+    out = run_available_now(spark, stream, work_dir, "append", src)
+    return out.filter(F.col("user_id") >= 0)
 
 
 def click_purchase_join_rollup(
@@ -289,24 +234,13 @@ def run_click_purchase_join_rollup_once(
     watermark: the documented lesson)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "flushed")
-    sink = f"mem_ssjr_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            click_purchase_join_rollup(spark, src, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_available_now(
+        spark,
+        click_purchase_join_rollup(spark, src, max_files_per_trigger=1),
+        work_dir,
+        "append",
+        src,
+    )
 
 
 def run_click_purchase_left_join_once(
@@ -314,9 +248,7 @@ def run_click_purchase_left_join_once(
 ) -> DataFrame:
     """availableNow harness for the LEFT OUTER stream-stream join — see
     :func:`_run_outer_join_once` for the flush/completeness protocol."""
-    return _run_outer_join_once(
-        spark, sf_dir, work_dir, click_purchase_left_join, "mem_ssloj"
-    )
+    return _run_outer_join_once(spark, sf_dir, work_dir, click_purchase_left_join)
 
 
 def click_purchase_full_join(
@@ -381,9 +313,7 @@ def run_click_purchase_full_join_once(
 ) -> DataFrame:
     """availableNow harness for the FULL OUTER stream-stream join — see
     :func:`_run_outer_join_once` for the flush/completeness protocol."""
-    return _run_outer_join_once(
-        spark, sf_dir, work_dir, click_purchase_full_join, "mem_ssfoj"
-    )
+    return _run_outer_join_once(spark, sf_dir, work_dir, click_purchase_full_join)
 
 
 def stream_static_enrich(
@@ -441,18 +371,9 @@ def run_stream_static_enrich_once(
     (stateless — every stream row passes through once)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sse_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_static_enrich(spark, src, sf_dir)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, stream_static_enrich(spark, src, sf_dir), work_dir, "append"
     )
-    q.awaitTermination()
-    return drain_memory_sink(spark, sink)
 
 
 def click_purchase_semi_join(
@@ -503,31 +424,11 @@ def click_purchase_semi_join(
 def run_click_purchase_semi_join_once(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
-    """availableNow harness for the stream-stream LEFT SEMI join. Runs
-    under the same reduced state-store partition count as the outer-join
-    harnesses (``util.state_partitions``): a stream-stream join
-    pays per-partition state snapshot/commit cost on EVERY micro-batch
-    regardless of row count, and the semi join keeps the same four
-    instances per partition as the inner join — the conf window opens
-    AFTER the last ``read_table`` (whose ``prep_session`` would reset
-    it) and before the checkpoint is created."""
+    """availableNow harness for the stream-stream LEFT SEMI join, under
+    the state-partition window (it keeps the same four state-store
+    instances per partition as the inner join)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sssj_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            click_purchase_semi_join(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_available_now(
+        spark, click_purchase_semi_join(spark, src), work_dir, "append", src
+    )

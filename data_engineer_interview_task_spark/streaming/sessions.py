@@ -24,8 +24,6 @@ session must eventually emit: it adds an event-time timeout at
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
@@ -39,7 +37,7 @@ from pyspark.sql.types import (
 
 from ..plans import prep_session
 from .weekly import EVENTS_SCHEMA
-from .util import drain_memory_sink, staged_events
+from .util import run_available_now, staged_events
 
 SESSION_SCHEMA = StructType(
     [
@@ -226,18 +224,9 @@ def run_sessionize_once(
     table once and return the emitted (closed) sessions as a batch frame."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stream(spark, src, gap_minutes)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, sessionize_stream(spark, src, gap_minutes), work_dir, "append"
     )
-    q.awaitTermination()
-    return drain_memory_sink(spark, sink)
 
 
 def session_window_stream(
@@ -290,15 +279,6 @@ def run_session_window_once(
     watermark exceeds the fixture's 30-day span so no event is late)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_swin_{uuid.uuid4().hex[:8]}"
-    q = (
-        session_window_stream(spark, src, gap_minutes)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        spark, session_window_stream(spark, src, gap_minutes), work_dir, "complete"
     )
-    q.awaitTermination()
-    return drain_memory_sink(spark, sink)

@@ -33,7 +33,6 @@ key across executors (RocksDB-backed in production).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -50,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans import prep_session
-from .util import drain_memory_sink
+from .util import run_available_now, staged_custom
 
 #: emitted per (user, batch): running totals + the batch sequence number
 RUNNING_SCHEMA = StructType(
@@ -221,29 +220,16 @@ def run_running_user_stats_once(
             "append"
         ).parquet(path)
 
-    from .util import staged_custom
-
     src = staged_custom(spark, sf_dir, "events_split_running", _build)
     stream_fn = (
         running_user_stats_stream
         if use_transform_with_state
         else running_user_stats_stream_gs
     )
-    sink = f"mem_running_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_fn(spark, src)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    emitted = run_available_now(spark, stream_fn(spark, src), work_dir, "append")
     w = Window.partitionBy("user_id").orderBy(F.col("batch_seq").desc())
     return (
-        drain_memory_sink(spark, sink)
-        .withColumn("rn", F.row_number().over(w))
+        emitted.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
@@ -353,24 +339,13 @@ def run_user_ewma_once(
         ).parquet(path)
         bump_new_files_mtime(path, before)
 
-    from .util import staged_custom
-
     src = staged_custom(spark, sf_dir, "events_split_ewma", _build)
-    sink = f"mem_ewma_{uuid.uuid4().hex[:8]}"
-    q = (
-        user_ewma_stream_gs(spark, src)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    emitted = run_available_now(
+        spark, user_ewma_stream_gs(spark, src), work_dir, "append"
     )
-    q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy(F.col("batch_seq").desc())
     return (
-        drain_memory_sink(spark, sink)
-        .withColumn("rn", F.row_number().over(w))
+        emitted.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "ewma_value")
     )

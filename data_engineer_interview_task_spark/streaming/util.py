@@ -1,22 +1,39 @@
-"""Shared micro-batch harness hygiene.
+"""Shared micro-batch harness plumbing.
 
-Every ``run_*_once`` harness here terminates an availableNow query into a
-memory sink and used to return ``spark.table(sink)`` lazily — leaving the
-sink's driver-held row buffer AND its temp view alive for the life of the
-session. In a shared session (the driver's correctness sweep, bench.py,
-check_oracle) those buffers accumulate: a complete-mode session-window
-sink holds ~1M rows at sf1, and twelve streaming queries × repeated runs
-turned into GC pressure that inflated UNRELATED queries' wall time
-(measured: streaming_session_window 3.6s in a fresh session vs 31s late
-in a 12-run session — the same failure class bench.py's clearCache()
-fixed for persisted blocks).
+:func:`run_available_now` is the one run block every memory-sink
+``run_*_once`` harness goes through: it starts the harness's streaming
+frame into a uuid-named memory sink with a fresh per-sink checkpoint
+under ``work_dir``, runs it with an ``availableNow`` trigger
+(process-everything-then-stop), optionally inside the
+:func:`state_partition_window` conf window, and returns the drained
+result. Harnesses that need a different writer (the file-sink restart
+of the incremental late audit, the ``processAllAvailable`` Python
+DataSource feeds) use the conf window on its own.
+
+:func:`staged_custom` is the one staging memo: per-process copies of a
+corpus table laid out as a FileStreamSource feed, keyed on the input's
+fingerprint and published atomically.
+
+Why results are drained rather than returned as ``spark.table(sink)``:
+a lazy sink frame keeps the sink's driver-held row buffer AND its temp
+view alive for the life of the session. In a shared session (the
+driver's correctness sweep, bench.py, check_oracle) those buffers
+accumulate: a complete-mode session-window sink holds ~1M rows at sf1,
+and twelve streaming queries × repeated runs turned into GC pressure
+that inflated UNRELATED queries' wall time (measured:
+streaming_session_window 3.6s in a fresh session vs 31s late in a
+12-run session — the same failure class bench.py's clearCache() fixed
+for persisted blocks).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import tempfile
 import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,14 +50,6 @@ STATE_PARTITIONS_FLOOR = 2
 #: partition keeps each store's snapshot small while never exceeding the
 #: session's core count.
 STATE_TARGET_BYTES = 64 * 1024 * 1024
-
-#: Backwards-compatible constant (r12 shape): the env override or the
-#: floor. Call sites that know their source dir should prefer
-#: :func:`state_partitions`, which scales the default with input volume
-#: (VERDICT r12 "What's wrong" item 1 — a literal default encodes bench
-#: scale; the derived one is ~bench-identical at sf0.1 but spreads GB
-#: state at production volumes).
-STATE_PARTITIONS = os.environ.get(STATE_PARTITIONS_ENV, str(STATE_PARTITIONS_FLOOR))
 
 
 def _dir_bytes(path: str) -> int:
@@ -83,6 +92,29 @@ def state_partitions(spark: SparkSession, src: str | None = None) -> str:
     return str(n)
 
 
+@contextlib.contextmanager
+def state_partition_window(spark: SparkSession, src: str | None):
+    """Run the enclosed streaming query under ``state_partitions(spark,
+    src)`` shuffle partitions, restoring the prior value on exit.
+
+    A stateful micro-batch query pays one state-store snapshot/commit
+    per shuffle partition (four per partition for a stream-stream join)
+    on EVERY batch regardless of row count: at the session's 32
+    partitions an outer join paid 128 commits, ~3.5s per batch, for
+    batches of four rows (OPTIMIZATION_r12.md). The count is pinned into
+    the query's checkpoint when it first starts, so the window must be
+    open while the query starts (and, for a restart, while it restarts)
+    and must open AFTER the harness's last ``read_table`` /
+    ``prep_session``, which reset the session confs."""
+    conf_key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, state_partitions(spark, src))
+    try:
+        yield
+    finally:
+        spark.conf.set(conf_key, prior)
+
+
 def snapshot_parquet_files(src: str) -> set[str]:
     """Names of the parquet part files currently in ``src`` — take before
     an append-write, pass to :func:`bump_new_files_mtime` after."""
@@ -105,16 +137,15 @@ def bump_new_files_mtime(src: str, before: set[str]) -> None:
             os.utime(os.path.join(src, f), (later, later))
 
 
-#: (sf_dir, flavor, events fingerprint) -> staged source dir. The
-#: harness staging write — copying the events table into a
-#: FileStreamSource-readable dir — is per-run SETUP, not the measured
-#: streaming computation (VERDICT r12 next-round item 5): the staged
-#: bytes are a pure function of the immutable testdata, so one copy per
-#: process serves every run (each run still creates a FRESH checkpoint
-#: and replays the full micro-batch pipeline from the staged files —
-#: nothing of the QUERY's work is cached). Keyed on the events input
-#: fingerprint so a regenerated corpus re-stages instead of serving
-#: stale files (the read_table-memo ADVICE applied here from the start).
+#: (sf_dir, name, input fingerprint) -> staged source dir. The harness
+#: staging write — copying a corpus table into a FileStreamSource-
+#: readable layout — is per-run SETUP, not the measured streaming
+#: computation: the staged bytes are a pure function of the input, so
+#: one copy per process serves every run (each run still creates a
+#: FRESH checkpoint and replays the full micro-batch pipeline from the
+#: staged files — nothing of the QUERY's work is cached). Keyed on the
+#: input fingerprint so a rewritten corpus re-stages instead of serving
+#: stale files.
 _STAGED: dict[tuple, str] = {}
 _STAGE_LOCK = threading.Lock()
 _STAGE_ROOT: list[str] = []
@@ -126,65 +157,17 @@ def _stage_root() -> str:
     return _STAGE_ROOT[0]
 
 
-def staged_events(spark: SparkSession, sf_dir: str, flavor: str = "plain") -> str:
-    """Path of a staged copy of the ``events`` table for the streaming
-    harnesses, built at most once per process per (sf_dir, flavor).
-
-    Flavors (each a deterministic function of the testdata):
-
-    - ``plain``: the events table as written by one overwrite — the
-      input for the stateless / aggregate harnesses.
-    - ``flushed``: ONE bulk file (repartition(1)) plus one strictly
-      newer flush file holding a ``max(ts)+10d`` sentinel per join side
-      — the outer-join / join-rollup completeness protocol (see
-      ``joins._run_outer_join_once``); ``maxFilesPerTrigger=1`` then
-      yields the bulk batch, the watermark-advancing flush batch, and
-      the trailing no-data batch.
-    """
-    from ..plans.artifacts import input_fingerprint, _stable_hash
-    from ..sources import read_table
-
-    key = (sf_dir, flavor, input_fingerprint(f"{sf_dir}/events.parquet"))
-    with _STAGE_LOCK:
-        path = _STAGED.get(key)
-        if path is not None:
-            return path
-        path = os.path.join(
-            _stage_root(), f"events_{flavor}_{_stable_hash(key)}"
-        )
-        events = read_table(spark, sf_dir, "events")
-        if flavor == "plain":
-            events.write.mode("overwrite").parquet(path)
-        elif flavor == "flushed":
-            events.repartition(1).write.mode("overwrite").parquet(path)
-            max_ts = events.agg(F.max("ts")).collect()[0][0]
-            before = snapshot_parquet_files(path)
-            from .weekly import EVENTS_SCHEMA
-
-            flush = spark.createDataFrame(
-                [
-                    (-1, max_ts, -1, "click", 0.0, "{}"),
-                    (-2, max_ts, -1, "purchase", 0.0, "{}"),
-                ],
-                schema=EVENTS_SCHEMA,
-            ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 DAYS"))
-            flush.coalesce(1).write.mode("append").parquet(path)
-            bump_new_files_mtime(path, before)
-        else:
-            raise ValueError(f"unknown staging flavor: {flavor}")
-        _STAGED[key] = path
-    return path
-
-
 def staged_custom(
     spark, sf_dir: str, name: str, build, input_table: str = "events"
 ) -> str:
-    """Memoized harness staging for source layouts :func:`staged_events`
-    does not cover (e.g. the two-file time splits of the stateful-fold
-    harnesses): ``build(path)`` writes the staged files once per process
-    per (sf_dir, name, ``input_table`` fingerprint); later runs reuse
-    them. The same setup-not-query rationale and staleness key as
-    :func:`staged_events`."""
+    """Path of the staged feed ``name`` for ``sf_dir``: ``build(path)``
+    writes it at most once per process per (sf_dir, name,
+    ``input_table`` fingerprint); later calls reuse it.
+
+    ``build`` writes into a sibling temp dir that is renamed into place
+    only when it returns, and removed when it raises — a failed build
+    leaves nothing behind for a retry to append onto (the
+    ``plans.artifacts`` build-then-rename pattern)."""
     from ..plans.artifacts import input_fingerprint, _stable_hash
 
     key = (
@@ -197,9 +180,63 @@ def staged_custom(
         if path is not None:
             return path
         path = os.path.join(_stage_root(), f"{name}_{_stable_hash(key)}")
-        build(path)
+        tmp = f"{path}.__build_{uuid.uuid4().hex[:8]}"
+        try:
+            build(tmp)
+            os.replace(tmp, path)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         _STAGED[key] = path
     return path
+
+
+def _stage_plain(spark: SparkSession, sf_dir: str, path: str) -> None:
+    from ..sources import read_table
+
+    read_table(spark, sf_dir, "events").write.parquet(path)
+
+
+def _stage_flushed(spark: SparkSession, sf_dir: str, path: str) -> None:
+    from ..sources import read_table
+    from .weekly import EVENTS_SCHEMA
+
+    events = read_table(spark, sf_dir, "events")
+    events.repartition(1).write.parquet(path)
+    max_ts = events.agg(F.max("ts")).collect()[0][0]
+    before = snapshot_parquet_files(path)
+    flush = spark.createDataFrame(
+        [
+            (-1, max_ts, -1, "click", 0.0, "{}"),
+            (-2, max_ts, -1, "purchase", 0.0, "{}"),
+        ],
+        schema=EVENTS_SCHEMA,
+    ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 DAYS"))
+    flush.coalesce(1).write.mode("append").parquet(path)
+    bump_new_files_mtime(path, before)
+
+
+_EVENT_STAGINGS = {"plain": _stage_plain, "flushed": _stage_flushed}
+
+
+def staged_events(spark: SparkSession, sf_dir: str, flavor: str = "plain") -> str:
+    """:func:`staged_custom` copy of the ``events`` table for the
+    streaming harnesses, one per flavor:
+
+    - ``plain``: the events table as written by one plain write — the
+      input for the stateless / aggregate harnesses.
+    - ``flushed``: ONE bulk file (repartition(1)) plus one strictly
+      newer flush file holding a ``max(ts)+10d`` sentinel per join side
+      — the outer-join / join-rollup completeness protocol (see
+      ``joins._run_outer_join_once``); ``maxFilesPerTrigger=1`` then
+      yields the bulk batch, the watermark-advancing flush batch, and
+      the trailing no-data batch.
+    """
+    if flavor not in _EVENT_STAGINGS:
+        raise ValueError(f"unknown staging flavor: {flavor}")
+    stage = _EVENT_STAGINGS[flavor]
+    return staged_custom(
+        spark, sf_dir, f"events_{flavor}", lambda path: stage(spark, sf_dir, path)
+    )
 
 
 def drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
@@ -211,3 +248,46 @@ def drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
     out = spark.table(sink).localCheckpoint(eager=True)
     spark.catalog.dropTempView(sink)
     return out
+
+
+def run_available_now(
+    spark: SparkSession,
+    df: DataFrame,
+    work_dir: str,
+    mode: str,
+    state_src: str | None = None,
+) -> DataFrame:
+    """Run the streaming frame ``df`` to completion and return its
+    output as a batch frame: a uuid-named memory sink in output ``mode``,
+    a fresh checkpoint at ``{work_dir}/ckpt_{sink}``, and an
+    ``availableNow`` trigger.
+
+    ``state_src``: the staged source dir of a stateful harness — the
+    query then runs inside :func:`state_partition_window` sized to that
+    source's volume. ``None`` leaves the session's shuffle partitions
+    untouched (the pandas-fold and stateless harnesses, where the
+    window measured no gain — OPTIMIZATION_r12.md). Because ``df`` is
+    built before this call, the window always opens after the caller's
+    last ``read_table`` / ``prep_session``. A query that fails leaves
+    neither the conf change nor the sink's temp view behind."""
+    sink = f"mem_{uuid.uuid4().hex[:12]}"
+    window = (
+        contextlib.nullcontext()
+        if state_src is None
+        else state_partition_window(spark, state_src)
+    )
+    with window:
+        try:
+            (
+                df.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(mode)
+                .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        except BaseException:
+            spark.catalog.dropTempView(sink)
+            raise
+    return drain_memory_sink(spark, sink)
