@@ -17,6 +17,7 @@ Cross-engine determinism rules used throughout (so value hashes match):
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -168,25 +169,15 @@ def _trends_pipeline_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("interest", F.col("interest").cast("long"))
 
 
-_WORK_DIRS: dict[tuple[str, str], str] = {}
-
-
-def _work_dir(kind: str, sf_dir: str) -> str:
-    """One cached scratch dir per (wrapper, sf_dir) per process, wiped on
-    reuse — repeated driver/bench sweeps see a fresh dir without
-    accumulating a copy per call under /tmp (ADVICE r3)."""
-    import shutil
-    import tempfile
-
-    key = (kind, sf_dir)
-    path = _WORK_DIRS.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix=f"{kind}_")
-        _WORK_DIRS[key] = path
-    else:
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path, exist_ok=True)
-    return path
+def _in_temp_dir(harness: Callable[..., DataFrame], *args) -> DataFrame:
+    """``harness(*args, work_dir)`` in a scratch dir of its own, removed
+    on return. Every harness returns a frame that no longer reads under
+    ``work_dir``, so a later or concurrent call of the same query never
+    deletes files a live result or checkpoint still uses."""
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_work_", ignore_cleanup_errors=True
+    ) as work_dir:
+        return harness(*args, work_dir)
 
 
 def _streaming_incremental_late_audit(
@@ -203,9 +194,7 @@ def _streaming_incremental_late_audit(
         run_incremental_late_audit,
     )
 
-    return run_incremental_late_audit(
-        spark, sf_dir, _work_dir("stream_inc_late", sf_dir)
-    )
+    return _in_temp_dir(run_incremental_late_audit, spark, sf_dir)
 
 
 def _streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,9 +207,7 @@ def _streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_late_data_audit_once,
     )
 
-    return run_late_data_audit_once(
-        spark, sf_dir, _work_dir("stream_late", sf_dir)
-    )
+    return _in_temp_dir(run_late_data_audit_once, spark, sf_dir)
 
 
 def _streaming_update_mode_rollup(
@@ -235,9 +222,7 @@ def _streaming_update_mode_rollup(
         run_update_mode_rollup_once,
     )
 
-    return run_update_mode_rollup_once(
-        spark, sf_dir, _work_dir("stream_upd", sf_dir)
-    )
+    return _in_temp_dir(run_update_mode_rollup_once, spark, sf_dir)
 
 
 def _streaming_python_datasource_rollup(
@@ -253,9 +238,7 @@ def _streaming_python_datasource_rollup(
         run_tick_stream_rollup_once,
     )
 
-    return run_tick_stream_rollup_once(
-        spark, _work_dir("stream_pyds", sf_dir)
-    )
+    return _in_temp_dir(run_tick_stream_rollup_once, spark)
 
 
 def _streaming_tick_restart_continuity(
@@ -270,9 +253,7 @@ def _streaming_tick_restart_continuity(
         run_tick_stream_restart_once,
     )
 
-    return run_tick_stream_restart_once(
-        spark, _work_dir("stream_pyds_restart", sf_dir)
-    )
+    return _in_temp_dir(run_tick_stream_restart_once, spark)
 
 
 def _streaming_dhash_index_maintenance(
@@ -289,9 +270,7 @@ def _streaming_dhash_index_maintenance(
         run_dhash_index_maintenance_once,
     )
 
-    return run_dhash_index_maintenance_once(
-        spark, sf_dir, _work_dir("stream_dhash_idx", sf_dir)
-    )
+    return _in_temp_dir(run_dhash_index_maintenance_once, spark, sf_dir)
 
 
 def _streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,9 +279,7 @@ def _streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the plain batch COUNT(DISTINCT) per epoch-aligned week."""
     from data_engineer_interview_task_spark.streaming import run_bitmap_distinct_once
 
-    return run_bitmap_distinct_once(
-        spark, sf_dir, _work_dir("stream_bitmap", sf_dir)
-    )
+    return _in_temp_dir(run_bitmap_distinct_once, spark, sf_dir)
 
 
 def _streaming_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,7 +289,7 @@ def _streaming_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     which DuckDB replicates exactly with epoch_us integer arithmetic."""
     from data_engineer_interview_task_spark.streaming import run_weekly_rollup_once
 
-    return run_weekly_rollup_once(spark, sf_dir, _work_dir("stream_rollup", sf_dir))
+    return _in_temp_dir(run_weekly_rollup_once, spark, sf_dir)
 
 
 def _streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,7 +299,7 @@ def _streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-offsets per event with integer epoch arithmetic."""
     from data_engineer_interview_task_spark.streaming import run_sliding_rollup_once
 
-    return run_sliding_rollup_once(spark, sf_dir, _work_dir("stream_sliding", sf_dir))
+    return _in_temp_dir(run_sliding_rollup_once, spark, sf_dir)
 
 
 def _streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,7 +310,7 @@ def _streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     property is additionally pinned by tests/test_streaming_sessions.py."""
     from data_engineer_interview_task_spark.streaming import run_sessionize_once
 
-    return run_sessionize_once(spark, sf_dir, _work_dir("stream_sessions", sf_dir))
+    return _in_temp_dir(run_sessionize_once, spark, sf_dir)
 
 
 def _chargram_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,7 +333,7 @@ def _streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_static_enrich_once,
     )
 
-    return run_stream_static_enrich_once(spark, sf_dir, _work_dir("stream_sse", sf_dir))
+    return _in_temp_dir(run_stream_static_enrich_once, spark, sf_dir)
 
 
 def _streaming_dedup_then_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,7 +345,7 @@ def _streaming_dedup_then_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_dedup_then_rollup_once,
     )
 
-    return run_dedup_then_rollup_once(spark, sf_dir, _work_dir("stream_ddrl", sf_dir))
+    return _in_temp_dir(run_dedup_then_rollup_once, spark, sf_dir)
 
 
 def _observed_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,9 +369,7 @@ def _streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_click_purchase_full_join_once,
     )
 
-    return run_click_purchase_full_join_once(
-        spark, sf_dir, _work_dir("stream_ssfoj", sf_dir)
-    )
+    return _in_temp_dir(run_click_purchase_full_join_once, spark, sf_dir)
 
 
 def _streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -407,9 +382,7 @@ def _streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_click_purchase_semi_join_once,
     )
 
-    return run_click_purchase_semi_join_once(
-        spark, sf_dir, _work_dir("stream_sssj", sf_dir)
-    )
+    return _in_temp_dir(run_click_purchase_semi_join_once, spark, sf_dir)
 
 
 def _streaming_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,7 +394,7 @@ def _streaming_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition order matches)."""
     from data_engineer_interview_task_spark.streaming import run_user_ewma_once
 
-    return run_user_ewma_once(spark, sf_dir, _work_dir("stream_ewma", sf_dir))
+    return _in_temp_dir(run_user_ewma_once, spark, sf_dir)
 
 
 def _streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,7 +408,7 @@ def _streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_sessions.py."""
     from data_engineer_interview_task_spark.streaming import run_session_window_once
 
-    return run_session_window_once(spark, sf_dir, _work_dir("stream_swin", sf_dir))
+    return _in_temp_dir(run_session_window_once, spark, sf_dir)
 
 
 def _streaming_first_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,7 +417,7 @@ def _streaming_first_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     query is fully oracle-checkable."""
     from data_engineer_interview_task_spark.streaming import run_first_events_once
 
-    return run_first_events_once(spark, sf_dir, _work_dir("stream_dedup", sf_dir))
+    return _in_temp_dir(run_first_events_once, spark, sf_dir)
 
 
 def _streaming_first_events_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,9 +431,7 @@ def _streaming_first_events_bounded(spark: SparkSession, sf_dir: str) -> DataFra
         run_first_events_bounded_once,
     )
 
-    return run_first_events_bounded_once(
-        spark, sf_dir, _work_dir("stream_dedup_wm", sf_dir)
-    )
+    return _in_temp_dir(run_first_events_bounded_once, spark, sf_dir)
 
 
 def _streaming_running_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,9 +447,7 @@ def _streaming_running_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
         run_running_user_stats_once,
     )
 
-    return run_running_user_stats_once(
-        spark, sf_dir, _work_dir("stream_running", sf_dir)
-    )
+    return _in_temp_dir(run_running_user_stats_once, spark, sf_dir)
 
 
 def _streaming_join_then_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,9 +460,7 @@ def _streaming_join_then_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_click_purchase_join_rollup_once,
     )
 
-    return run_click_purchase_join_rollup_once(
-        spark, sf_dir, _work_dir("stream_ssjr", sf_dir)
-    )
+    return _in_temp_dir(run_click_purchase_join_rollup_once, spark, sf_dir)
 
 
 def _streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,7 +473,7 @@ def _streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFram
         run_click_purchase_join_once,
     )
 
-    return run_click_purchase_join_once(spark, sf_dir, _work_dir("stream_ssj", sf_dir))
+    return _in_temp_dir(run_click_purchase_join_once, spark, sf_dir)
 
 
 def _schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,7 +484,7 @@ def _schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema_evolution_read,
     )
 
-    return schema_evolution_read(spark, sf_dir, _work_dir("schema_evo", sf_dir))
+    return _in_temp_dir(schema_evolution_read, spark, sf_dir)
 
 
 def _streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,9 +497,7 @@ def _streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_click_purchase_left_join_once,
     )
 
-    return run_click_purchase_left_join_once(
-        spark, sf_dir, _work_dir("stream_ssloj", sf_dir)
-    )
+    return _in_temp_dir(run_click_purchase_left_join_once, spark, sf_dir)
 
 
 def _ngram_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:

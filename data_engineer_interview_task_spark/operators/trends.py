@@ -70,29 +70,36 @@ def transform_data(
 
 def filter_same_interest_countries(df: DataFrame, n_terms: int = 5) -> DataFrame:
     """W:70-87 ``filtering_countries_with_same_interests``: drop countries
-    where ALL search terms carry one identical interest value.
+    where ALL search terms carry one identical interest value in a week.
 
     Implemented exactly as the reference's grouped form (SURVEY §2 rows
     14-16), not the simplified predicate, so edge cases (<5 terms per
     country) hash-match:
 
-    1. group by (country, interest), count **distinct** search_terms (W:76);
+    1. group by (country, week_start, interest), count **distinct**
+       search_terms (W:76);
     2. HAVING count < n_terms (W:79);
-    3. keep base rows whose country appears in any such group (W:82-85).
+    3. keep base rows whose (country, week_start) appears in any such
+       group (W:82-85).
+
+    The reference runs one week per call; keying on ``week_start`` makes
+    a multi-week frame filter each week as its own run would (without
+    it, an all-same week survives when the country varies in another).
 
     The reference collects the country list to the driver and filters with
     ``isin`` — at scale that's a driver bottleneck; the distributed
     equivalent is a **left-semi join**, which AQE turns into a broadcast
-    hash join when the keep-list is small (it is: one row per country).
+    hash join when the keep-list is small (it is: one row per country
+    and week).
     """
     keep = (
-        df.groupBy("country", "interest")
+        df.groupBy("country", "week_start", "interest")
         .agg(F.countDistinct("search_term").alias("n_distinct_terms"))
         .filter(F.col("n_distinct_terms") < n_terms)
-        .select("country")
+        .select("country", "week_start")
         .distinct()
     )
-    return df.join(F.broadcast(keep), "country", "left_semi")
+    return df.join(F.broadcast(keep), ["country", "week_start"], "left_semi")
 
 
 def rank_search_terms(df: DataFrame) -> DataFrame:

@@ -109,6 +109,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
         (F.col("doc_id") + F.lit(10000000)).alias("doc_id"), "text", "lang"
     ).write.mode("overwrite").parquet(f"{work_dir}/evo/batch=v2")
     merged = spark.read.option("mergeSchema", "true").parquet(f"{work_dir}/evo")
+    # eager: the result must not read ``evo`` after work_dir is gone
     return merged.select(
         "doc_id", "lang", F.md5(F.col("text").cast("binary")).alias("fp")
-    )
+    ).localCheckpoint(eager=True)

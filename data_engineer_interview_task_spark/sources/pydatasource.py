@@ -224,4 +224,6 @@ def run_tick_stream_restart_once(spark: SparkSession, work_dir: str):
                 F.min("v").cast("long").alias("min_v"),
                 F.max("v").cast("long").alias("max_v"),
             )
+            # eager: the result must not read ``out`` after work_dir is gone
+            .localCheckpoint(eager=True)
         )

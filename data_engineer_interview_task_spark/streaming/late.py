@@ -47,7 +47,7 @@ never midnight.
 
 from __future__ import annotations
 
-import tempfile
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -195,7 +195,6 @@ def _copy_tranches(stage: str, src: str, tranches, start_seq: int) -> None:
     with strictly increasing mtimes (the file source processes files in
     mtime order; equal mtimes are undefined — the EWMA lesson)."""
     import glob
-    import os
     import shutil
     import time
 
@@ -241,13 +240,15 @@ def run_incremental_late_audit(
         "events_inc_tranches",
         lambda path: _stage_tranches(spark, sf_dir, path),
     )
-    src = tempfile.mkdtemp(prefix="events_inc_src_")
-    ckpt = f"{work_dir}/ckpt_inc_{uuid.uuid4().hex[:8]}"
+    run_id = uuid.uuid4().hex[:8]
+    src = f"{work_dir}/src_inc_{run_id}"
+    os.makedirs(src)
+    ckpt = f"{work_dir}/ckpt_inc_{run_id}"
     # the memory sink cannot recover a checkpoint; the FILE sink is the
     # recoverable (and production) choice — run 2 appends to the same
     # output dir under the same checkpoint, and the sink's commit log
     # keeps the emitted set exactly-once across the restart
-    out = f"{work_dir}/out_inc_{uuid.uuid4().hex[:8]}"
+    out = f"{work_dir}/out_inc_{run_id}"
     # sized from the stage dir, which already holds every tranche (src
     # is still empty here); the checkpoint pins the count for run 2
     with state_partition_window(spark, stage):
@@ -269,7 +270,8 @@ def run_incremental_late_audit(
                 # SAME checkpoint
                 _copy_tranches(stage, src, ("t3", "t4"), 100)
     streamed = spark.read.schema("day date, n_streamed long").parquet(out)
-    return _audit(events, streamed)
+    # eager: the result must not read ``out`` after work_dir is gone
+    return _audit(events, streamed).localCheckpoint(eager=True)
 
 
 #: mid-DAY split for the update-mode replay: day 2024-01-20 straddles

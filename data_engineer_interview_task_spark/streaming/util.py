@@ -10,9 +10,10 @@ result. Harnesses that need a different writer (the file-sink restart
 of the incremental late audit, the ``processAllAvailable`` Python
 DataSource feeds) use the conf window on its own.
 
-:func:`staged_custom` is the one staging memo: per-process copies of a
-corpus table laid out as a FileStreamSource feed, keyed on the input's
-fingerprint and published atomically.
+:func:`staged_custom` stages a corpus table as a FileStreamSource feed
+through the one artifact store (``plans.artifacts.staged_dir``): keyed
+on the input's fingerprint, published atomically, shared by every run
+in the process.
 
 Why results are drained rather than returned as ``spark.table(sink)``:
 a lazy sink frame keeps the sink's driver-held row buffer AND its temp
@@ -30,9 +31,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import shutil
-import tempfile
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -137,57 +135,26 @@ def bump_new_files_mtime(src: str, before: set[str]) -> None:
             os.utime(os.path.join(src, f), (later, later))
 
 
-#: (sf_dir, name, input fingerprint) -> staged source dir. The harness
-#: staging write — copying a corpus table into a FileStreamSource-
-#: readable layout — is per-run SETUP, not the measured streaming
-#: computation: the staged bytes are a pure function of the input, so
-#: one copy per process serves every run (each run still creates a
-#: FRESH checkpoint and replays the full micro-batch pipeline from the
-#: staged files — nothing of the QUERY's work is cached). Keyed on the
-#: input fingerprint so a rewritten corpus re-stages instead of serving
-#: stale files.
-_STAGED: dict[tuple, str] = {}
-_STAGE_LOCK = threading.Lock()
-_STAGE_ROOT: list[str] = []
-
-
-def _stage_root() -> str:
-    if not _STAGE_ROOT:
-        _STAGE_ROOT.append(tempfile.mkdtemp(prefix="spark_graft_stream_src_"))
-    return _STAGE_ROOT[0]
-
-
 def staged_custom(
     spark, sf_dir: str, name: str, build, input_table: str = "events"
 ) -> str:
-    """Path of the staged feed ``name`` for ``sf_dir``: ``build(path)``
-    writes it at most once per process per (sf_dir, name,
-    ``input_table`` fingerprint); later calls reuse it.
+    """Path of the staged feed ``name`` for ``sf_dir``, written by
+    ``build(path)`` through ``plans.artifacts.staged_dir``: at most once
+    per process per ``input_table`` fingerprint, published atomically,
+    and removed if ``build`` raises.
 
-    ``build`` writes into a sibling temp dir that is renamed into place
-    only when it returns, and removed when it raises — a failed build
-    leaves nothing behind for a retry to append onto (the
-    ``plans.artifacts`` build-then-rename pattern)."""
-    from ..plans.artifacts import input_fingerprint, _stable_hash
+    Staging — copying a corpus table into a FileStreamSource-readable
+    layout — is per-run SETUP, not the measured streaming computation:
+    each run still starts a FRESH checkpoint and replays the full
+    micro-batch pipeline from the staged files."""
+    from ..plans.artifacts import staged_dir
 
-    key = (
-        sf_dir,
-        name,
-        input_fingerprint(f"{sf_dir}/{input_table}.parquet"),
+    return staged_dir(
+        (sf_dir, name),
+        f"stream_src_{name}_",
+        build,
+        inputs=(f"{sf_dir}/{input_table}.parquet",),
     )
-    with _STAGE_LOCK:
-        path = _STAGED.get(key)
-        if path is not None:
-            return path
-        path = os.path.join(_stage_root(), f"{name}_{_stable_hash(key)}")
-        tmp = f"{path}.__build_{uuid.uuid4().hex[:8]}"
-        try:
-            build(tmp)
-            os.replace(tmp, path)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        _STAGED[key] = path
-    return path
 
 
 def _stage_plain(spark: SparkSession, sf_dir: str, path: str) -> None:

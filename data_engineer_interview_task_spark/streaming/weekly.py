@@ -123,8 +123,7 @@ def run_weekly_rollup_once(
     """Run the streaming rollup over the events table with an
     ``availableNow`` trigger (process-everything-then-stop) into a memory
     sink, returning the batch result — the deterministic test harness for
-    the streaming path. ``work_dir`` holds the micro-batch source files and
-    checkpoint."""
+    the streaming path. ``work_dir`` holds the checkpoint."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_available_now(

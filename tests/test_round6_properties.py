@@ -479,7 +479,7 @@ def test_ivfpq_search_matches_probe_restricted_replay(spark, sf_dir):
 
     emb, codes, score = _adc_replay(spark, sf_dir)
     n_q, k, n_probe = 4, 10, 3
-    index_dir = similarity._cached_ivf_index(spark, sf_dir)
+    index_dir = similarity.prebuilt_ivf_index(spark, sf_dir)
     cents = spark.read.parquet(f"{index_dir}/centroids")
     queries = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -1,7 +1,8 @@
 """The shared streaming harness plumbing in ``streaming/util.py`` and the
 harness contracts that depend on it: the availableNow run helper's conf
 and sink hygiene, the staging memo's staleness key and atomic publish,
-the incremental audit's state sizing, and concurrent dHash maintenance.
+the incremental audit's state sizing, per-call work dirs, and concurrent
+dHash maintenance.
 """
 
 from __future__ import annotations
@@ -155,32 +156,81 @@ def test_late_audit_restages_events_rewritten_in_place(spark, sf_dir, tmp_path):
     assert sum(r[1] for r in second) == subset.num_rows
 
 
-def test_staged_custom_failed_build_publishes_nothing(spark, sf_dir, tmp_path):
-    """A build that dies partway leaves no files behind, so the retry's
-    append-mode build publishes exactly its own rows."""
-    sfx = _copy_table(sf_dir, "events", tmp_path / "sfa")
+def _stage_custom(spark, sfx, fail):
+    def build(path):
+        spark.range(3 if fail else 5).coalesce(1).write.mode("append").parquet(path)
+        if fail:
+            raise RuntimeError("interrupted build")
 
-    def bad(path):
-        spark.range(3).coalesce(1).write.mode("append").parquet(path)
-        raise RuntimeError("interrupted build")
+    return util.staged_custom(spark, sfx, "t_atomic", build)
 
-    def good(path):
-        spark.range(5).coalesce(1).write.mode("append").parquet(path)
 
-    with pytest.raises(RuntimeError, match="interrupted build"):
-        util.staged_custom(spark, sfx, "t_atomic", bad)
-    path = util.staged_custom(spark, sfx, "t_atomic", good)
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(
-        range(5)
+def _stage_materialized(spark, sfx, fail):
+    """The failing build's write job itself fails (a task error)."""
+    from data_engineer_interview_task_spark.plans import artifacts
+
+    def build():
+        df = spark.range(3 if fail else 5).coalesce(1)
+        if fail:
+            df = df.select(F.raise_error(F.lit("interrupted build")).cast("long"))
+        return df
+
+    df = artifacts.materialized(
+        spark, ("t_atomic", sfx), "t_atomic_", build, inputs=(f"{sfx}/events.parquet",)
     )
-    parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(parts) == 1
-    leftovers = [
-        d
-        for d in os.listdir(os.path.dirname(path))
-        if d.startswith(os.path.basename(path) + ".")
-    ]
-    assert leftovers == []
+    return os.path.dirname(df.inputFiles()[0].removeprefix("file://"))
+
+
+def test_staged_custom_failed_build_publishes_nothing(spark, sf_dir, tmp_path):
+    """A build that dies partway leaves no files behind, so the retry
+    publishes exactly its own rows — for a staged feed and for a
+    ``materialized`` table alike."""
+    for i, stage in enumerate((_stage_custom, _stage_materialized)):
+        sfx = _copy_table(sf_dir, "events", tmp_path / f"sf{i}")
+        with pytest.raises(Exception, match="interrupted build"):
+            stage(spark, sfx, fail=True)
+        path = stage(spark, sfx, fail=False)
+        ids = sorted(r.id for r in spark.read.parquet(path).collect())
+        assert ids == list(range(5))
+        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        assert len(parts) == 1
+        leftovers = [
+            d
+            for d in os.listdir(os.path.dirname(path))
+            if d.startswith(os.path.basename(path) + ".")
+        ]
+        assert leftovers == []
+
+
+# ------------------------------------------------------- per-call work dirs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_incremental_late_audit",
+        "streaming_tick_restart_continuity",
+        "schema_evolution_read",
+    ],
+)
+def test_result_survives_a_second_call(spark, sf_dir, name):
+    """Each call runs in its own work dir: a result collected after a
+    later call of the same query has returned still reads correctly."""
+    import __spark_entry__ as entry
+
+    run = entry.queries()[name]
+    first = run(spark, sf_dir)
+    run(spark, sf_dir).collect()
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    for t in ("events", "documents"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    oracle = con.execute(entry.oracle_sql()[name])
+    cols = [d[0] for d in oracle.description]
+    got = sorted(tuple(r) for r in first.select(*cols).collect())
+    assert got == sorted(oracle.fetchall())
 
 
 # ------------------------------------------------------ dHash maintenance

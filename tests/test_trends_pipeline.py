@@ -10,6 +10,8 @@ against real pandas:
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from data_engineer_interview_task_spark.operators import trends
 
@@ -158,3 +160,54 @@ def test_ingest_wide_matrix_missing_term_raises(spark):
     pdf = pd.DataFrame({"country": ["X"], "vpn": [1]})
     with _pytest.raises(ValueError, match="missing term columns"):
         ingest_wide_matrix(spark, pdf)
+
+
+def test_multi_week_frame_filters_each_week_as_its_own_run(spark):
+    """Property: filter + rank over the union of per-week transform_data
+    frames equals the union of the single-week pipelines — an all-same
+    week is dropped even when the same country varies in another week."""
+    from functools import reduce
+
+    from hypothesis import given, settings, strategies as st
+
+    weeks = [
+        ("2021-01-04", "2021-01-10"),
+        ("2021-01-11", "2021-01-17"),
+        ("2021-01-18", "2021-01-24"),
+    ]
+    cols = ["country", *trends.DEFAULT_TERMS]
+    n = len(trends.DEFAULT_TERMS)
+    interests = st.one_of(
+        st.integers(0, 2).map(lambda v: (v,) * n),  # an all-same row
+        st.tuples(*[st.integers(0, 2)] * n),
+    )
+    week_rows = st.dictionaries(
+        st.sampled_from(["A", "B", "C"]), interests, min_size=1, max_size=3
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    @given(st.lists(week_rows, min_size=2, max_size=len(weeks)))
+    @settings(max_examples=12, deadline=None)
+    def check(per_week):
+        wides = [
+            (spark.createDataFrame([(c, *v) for c, v in w.items()], cols), wk)
+            for w, wk in zip(per_week, weeks)
+        ]
+        long_df = reduce(
+            DataFrame.unionByName,
+            [trends.transform_data(w, *wk) for w, wk in wides],
+        )
+        multi = trends.rank_search_terms(
+            trends.filter_same_interest_countries(long_df)
+        ).select(
+            *trends.FINAL_COLUMNS, F.col("ranking").cast("int").alias("ranking")
+        )
+        single = reduce(
+            DataFrame.unionByName,
+            [trends.trends_pipeline(w, *wk) for w, wk in wides],
+        )
+        assert rows(multi) == rows(single)
+
+    check()
