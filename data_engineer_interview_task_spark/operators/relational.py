@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import read_table
+from . import trends
 
 
 def flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -25,10 +26,15 @@ def flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     country -> l_suppkey, search_term -> l_returnflag, interest -> total
     quantity. Stages: date-window filter (≈W:54's isin filter + W:19-28
-    week window) -> per-(supplier, flag) aggregate -> the W:70-87
-    same-interest drop (groupBy+countDistinct+HAVING+semi-join) -> the
-    W:90-112 ranking window with deterministic tie-break ('N' plays vpn's
-    tie-break role) -> final projection.
+    week window) -> per-(supplier, flag) aggregate -> the W:90-112
+    ranking window with deterministic tie-break ('N' plays vpn's
+    tie-break role) -> the W:70-87 same-interest drop (a supplier whose
+    three flags all carry one total_qty is dropped) -> final projection.
+
+    The rank and the drop are the paper's own operators
+    (``trends.rank_search_terms``, ``trends.filter_same_interest_countries``)
+    with lineitem's column names; ranking before the drop is exact for the
+    reason given in ``trends.trends_pipeline``.
 
     Exercises SURVEY §2 rows 9, 12, 14-16, 17-20 in one lazy lineage.
     """
@@ -41,26 +47,14 @@ def flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_suppkey", "l_returnflag")
         .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("total_qty"))
     )
-    # Same-interest drop: suppliers where every return flag has one identical
-    # total_qty would be dropped; implemented in the reference's literal
-    # grouped form (W:76-85) for edge-case fidelity.
-    keep = (
-        base.groupBy("l_suppkey", "total_qty")
-        .agg(F.countDistinct("l_returnflag").alias("n_flags"))
-        .filter(F.col("n_flags") < 3)
-        .select("l_suppkey")
-        .distinct()
-    )
-    kept = base.join(F.broadcast(keep), "l_suppkey", "left_semi")
-    n_priority = F.when(F.col("l_returnflag") == "N", 0).otherwise(1)
-    w = Window.partitionBy("l_suppkey").orderBy(
-        F.col("total_qty").desc(), n_priority.desc(), F.col("l_returnflag").asc()
-    )
+    cols = {"keys": ("l_suppkey",), "value": "total_qty", "term": "l_returnflag"}
+    ranked = trends.rank_search_terms(base, last_term="N", **cols)
+    kept = trends.filter_same_interest_countries(ranked, n_terms=3, **cols)
     return kept.select(
         "l_suppkey",
         "l_returnflag",
         F.col("total_qty").cast("double").alias("total_qty"),
-        F.row_number().over(w).cast("int").alias("ranking"),
+        F.col("ranking").cast("int").alias("ranking"),
     )
 
 

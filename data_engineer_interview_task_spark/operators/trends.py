@@ -3,7 +3,9 @@
 Reference: ``/root/reference/dags/google_trends_to_bigquery.py`` (cited as
 ``W:<line>``) and its historical twin. The five pandas/Airflow stages become
 composable functions over one lazy DataFrame lineage — no XCom JSON serde
-(W:39-119), no collects, no Python UDFs.
+(W:39-119), no collects, no joins or broadcasts, no Python UDFs: the whole
+pipeline plans as one scan of its input and one hash exchange on
+(country, week_start).
 
 Input shape (`trends_wide`, FIXTURES.md §1.1): one row per country, one long
 column per search term, values 0-100 — the post-serde shape of pytrends
@@ -68,60 +70,89 @@ def transform_data(
     )
 
 
-def filter_same_interest_countries(df: DataFrame, n_terms: int = 5) -> DataFrame:
+def filter_same_interest_countries(
+    df: DataFrame,
+    n_terms: int = 5,
+    keys: tuple[str, ...] = ("country", "week_start"),
+    value: str = "interest",
+    term: str = "search_term",
+) -> DataFrame:
     """W:70-87 ``filtering_countries_with_same_interests``: drop countries
     where ALL search terms carry one identical interest value in a week.
 
-    Implemented exactly as the reference's grouped form (SURVEY §2 rows
-    14-16), not the simplified predicate, so edge cases (<5 terms per
-    country) hash-match:
+    Exactly the reference's grouped form (SURVEY §2 rows 14-16), not the
+    simplified predicate, so edge cases (<5 terms per country) hash-match:
+    a ``keys`` group (country, week_start) is kept iff some ``value``
+    group inside it has fewer than ``n_terms`` distinct ``term``s (W:76,
+    W:79). Written as two window columns and a filter:
 
-    1. group by (country, week_start, interest), count **distinct**
-       search_terms (W:76);
-    2. HAVING count < n_terms (W:79);
-    3. keep base rows whose (country, week_start) appears in any such
-       group (W:82-85).
+    1. ``size(collect_set(term))`` over (keys) ordered by ``value``
+       DESC, in the RANGE frame of the current row — the rows sharing its
+       value, i.e. its value group — counts the distinct terms per value
+       group (W:76), marked when below ``n_terms``;
+    2. ``max(marked)`` over (keys) — any marked group keeps the key group
+       (W:82-85).
 
-    The reference runs one week per call; keying on ``week_start`` makes
-    a multi-week frame filter each week as its own run would (without
-    it, an all-same week survives when the country varies in another).
+    Rows with a NULL key are dropped, as the reference's groupby +
+    ``isin`` drops them. The reference runs one week per call; keying on
+    ``week_start`` makes a multi-week frame filter each week as its own
+    run would.
 
-    The reference collects the country list to the driver and filters with
-    ``isin`` — at scale that's a driver bottleneck; the distributed
-    equivalent is a **left-semi join**, which AQE turns into a broadcast
-    hash join when the keep-list is small (it is: one row per country
-    and week).
+    The reference collects the country list to the driver and filters
+    with ``isin``. Here nothing is collected, joined or broadcast: both
+    windows partition on ``keys``, so one hash exchange on ``keys`` serves
+    them, and none if the input is already clustered on ``keys``. Both
+    also need only the sort (keys, value DESC), which is a prefix of
+    ``rank_search_terms``'s sort, so after the rank they add no sort
+    either — one per-partition sort instead of two, and one window pass
+    per key group rather than per (key, value) group.
     """
-    keep = (
-        df.groupBy("country", "week_start", "interest")
-        .agg(F.countDistinct("search_term").alias("n_distinct_terms"))
-        .filter(F.col("n_distinct_terms") < n_terms)
-        .select("country", "week_start")
-        .distinct()
+    marked = "__same_interest_marked"
+    kept = "__same_interest_kept"
+    by_value = (
+        Window.partitionBy(*keys)
+        .orderBy(F.col(value).desc())
+        .rangeBetween(Window.currentRow, Window.currentRow)
     )
-    return df.join(F.broadcast(keep), ["country", "week_start"], "left_semi")
+    by_key = Window.partitionBy(*keys)
+    keep = F.col(kept)
+    for k in keys:
+        keep &= F.col(k).isNotNull()
+    return (
+        df.withColumn(marked, F.size(F.collect_set(term).over(by_value)) < n_terms)
+        .withColumn(kept, F.max(marked).over(by_key))
+        .filter(keep)
+        .drop(marked, kept)
+    )
 
 
-def rank_search_terms(df: DataFrame) -> DataFrame:
+def rank_search_terms(
+    df: DataFrame,
+    keys: tuple[str, ...] = ("country", "week_start"),
+    value: str = "interest",
+    term: str = "search_term",
+    last_term: str = "vpn",
+) -> DataFrame:
     """W:90-112 ``rank_search_terms``: rank terms per (country, week_start)
     by descending interest with the verified deterministic tie-break.
 
     The reference sorts globally (W:103) then applies pandas
     ``rank(method='first')`` (W:106), which SURVEY §2 row 19 verified to be
     exactly ``row_number()`` over the total order: interest DESC,
-    vpn-priority DESC (non-vpn=1 before vpn=0, so vpn ranks LAST among
-    ties, W:100), search_term ASC. The row-wise lambda at W:100 becomes a
-    codegen'd CASE WHEN — no Python UDF. No global sort is needed: the
-    window's per-partition sort subsumes it.
+    priority DESC (0 for ``last_term`` — vpn in the reference — and 1 for
+    every other term, so it ranks LAST among ties, W:100), search_term
+    ASC. The row-wise lambda at W:100 becomes a codegen'd CASE WHEN — no
+    Python UDF. No global sort is needed: the window's per-partition sort
+    subsumes it.
 
     All three orderBy keys are required — dropping any makes ranks
     nondeterministic across partitions (the #1 hash-mismatch risk).
     """
-    vpn_priority = F.when(F.col("search_term") == "vpn", 0).otherwise(1)
-    w = Window.partitionBy("country", "week_start").orderBy(
-        F.col("interest").desc(),
-        vpn_priority.desc(),
-        F.col("search_term").asc(),
+    last_priority = F.when(F.col(term) == last_term, 0).otherwise(1)
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(value).desc(),
+        last_priority.desc(),
+        F.col(term).asc(),
     )
     return df.withColumn("ranking", F.row_number().over(w))
 
@@ -136,8 +167,18 @@ def trends_pipeline(
     extract is the caller's ``wide`` DataFrame; the sink (W:116-159) is
     ``sources.sinks.append_to_table``. Output schema matches the declared
     BigQuery schema at W:136-143 (dates stay strings; see SURVEY §1.2).
+
+    The rank runs before the same-interest drop, the reverse of the
+    reference's order. That is exact: the drop keeps or removes whole
+    (country, week_start) groups, and ``row_number()`` inside a kept group
+    does not depend on the other groups. It is also what makes the plan
+    one scan and one exchange: the rank window's
+    ``hashpartitioning(country, week_start)`` and its sort on
+    (country, week_start, interest DESC, ...) already satisfy both filter
+    windows, so they add neither an exchange nor a sort.
     """
     long_df = transform_data(wide, week_start, week_end, terms)
-    kept = filter_same_interest_countries(long_df, n_terms=len(terms))
-    ranked = rank_search_terms(kept)
+    ranked = filter_same_interest_countries(
+        rank_search_terms(long_df), n_terms=len(terms)
+    )
     return ranked.select(*FINAL_COLUMNS, F.col("ranking").cast("int").alias("ranking"))

@@ -33,21 +33,29 @@ def test_dim_joins_are_broadcast(spark, sf_dir):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or plan.count("BroadcastHashJoin") >= 4
 
 
-def test_semi_join_not_collected(spark, sf_dir):
-    # the reference collects countries to the driver (W:82-85); we must see
-    # a semi join in the plan instead
+def test_trends_pipeline_one_exchange_one_scan(spark, tmp_path):
+    # the reference collects countries to the driver (W:82-85); the
+    # same-interest drop must stay distributed, and ride the rank window's
+    # exchange and sort: one hash exchange, one sort, no broadcast, one
+    # scan of the input
     from data_engineer_interview_task_spark.operators.trends import (
-        filter_same_interest_countries,
+        DEFAULT_TERMS,
+        trends_pipeline,
     )
 
-    wide = spark.createDataFrame(
-        [("A", 1, 2), ("B", 3, 3)], ["country", "vpn", "hack"]
-    )
-    from data_engineer_interview_task_spark.operators.trends import transform_data
-
-    long_df = transform_data(wide, "2021-01-04", "2021-01-10", terms=("vpn", "hack"))
-    plan = explain_str(filter_same_interest_countries(long_df))
-    assert "LeftSemi" in plan
+    path = str(tmp_path / "wide.parquet")
+    spark.createDataFrame(
+        [("A", 1, 2, 3, 4, 5), ("B", 3, 3, 3, 3, 3), ("C", 7, 7, 1, 7, 7)],
+        ["country", *DEFAULT_TERMS],
+    ).write.parquet(path)
+    out = trends_pipeline(spark.read.parquet(path), "2021-01-04", "2021-01-10")
+    assert {r.country for r in out.collect()} == {"A", "C"}
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1
+    assert final.count("Sort [") == 1
+    assert "BroadcastExchange" not in final
+    assert final.count("FileScan") == 1
 
 
 def test_whole_stage_codegen_everywhere_in_q1(spark, sf_dir):

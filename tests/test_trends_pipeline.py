@@ -211,3 +211,68 @@ def test_multi_week_frame_filters_each_week_as_its_own_run(spark):
         assert rows(multi) == rows(single)
 
     check()
+
+
+def _grouped_filter(df: DataFrame, n_terms: int) -> DataFrame:
+    """The reference's grouped form of the same-interest drop (W:76-85):
+    countDistinct + HAVING, a distinct keep-list, and a semi join in place
+    of the collect + isin."""
+    keys = ["country", "week_start"]
+    keep = (
+        df.groupBy(*keys, "interest")
+        .agg(F.countDistinct("search_term").alias("n_distinct_terms"))
+        .filter(F.col("n_distinct_terms") < n_terms)
+        .select(*keys)
+        .distinct()
+    )
+    return df.join(keep, keys, "left_semi")
+
+
+def test_windowed_filter_matches_grouped_form(spark):
+    """Differential property: the windowed same-interest drop equals the
+    grouped form on long frames with duplicate (country, week_start) rows,
+    NULL interests and countries, fewer terms than ``n_terms`` and several
+    weeks — and ranking before or after the drop gives the same rows."""
+    from collections import Counter
+
+    from hypothesis import example, given, settings, strategies as st
+
+    schema = "country string, week_start string, search_term string, interest long"
+    terms = trends.DEFAULT_TERMS
+    values = st.one_of(st.none(), st.integers(0, 2))
+    # one wide row: a (country, week) and a value for a subset of the terms,
+    # either one value for all of them or one each
+    wide_row = st.tuples(
+        st.sampled_from(["A", "B", None]),
+        st.sampled_from(["2021-01-04", "2021-01-11"]),
+        st.lists(st.sampled_from(terms), min_size=1, max_size=len(terms), unique=True),
+        st.one_of(values.map(lambda v: [v] * len(terms)),
+                  st.lists(values, min_size=len(terms), max_size=len(terms))),
+    )
+    all_1_then_all_2 = [
+        ("A", "2021-01-04", list(terms), [1] * len(terms)),
+        ("A", "2021-01-04", list(terms), [2] * len(terms)),
+    ]
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    @given(st.lists(wide_row, min_size=1, max_size=6), st.sampled_from([3, 5, 6]))
+    @example(all_1_then_all_2, 5)
+    @settings(max_examples=12, deadline=None)
+    def check(wide_rows, n_terms):
+        long_df = spark.createDataFrame(
+            [(c, wk, t, v) for c, wk, ts, vs in wide_rows for t, v in zip(ts, vs)],
+            schema,
+        )
+        windowed = trends.filter_same_interest_countries(long_df, n_terms)
+        assert rows(windowed) == rows(_grouped_filter(long_df, n_terms))
+        if wide_rows == all_1_then_all_2:
+            assert not rows(windowed)
+        assert rows(
+            trends.filter_same_interest_countries(
+                trends.rank_search_terms(long_df), n_terms
+            )
+        ) == rows(trends.rank_search_terms(windowed))
+
+    check()
