@@ -55,18 +55,23 @@ def transform_data(
     week_end: str,
     terms: tuple[str, ...] = DEFAULT_TERMS,
 ) -> DataFrame:
-    """W:45-67 ``transform_data``: melt -> isin safety filter (W:54) ->
-    constant date columns (W:59) -> rename (W:61) -> fixed projection (W:64).
+    """W:45-67 ``transform_data``: melt -> constant date columns (W:59) ->
+    rename (W:61) -> fixed projection (W:64), the last three as one
+    ``select``.
+
+    The reference's ``isin`` safety filter (W:54) is not repeated: the melt
+    unpivots exactly ``terms``, so every ``search_term`` is one of them and
+    the filter would only cost an analyzer pass and a plan ``Filter``.
 
     ``week_start``/``week_end`` are injected like the historical DAG
     (``H:19-20``) — never computed from "now" inside a query.
     """
-    long_df = melt_terms(wide, terms)
-    return (
-        long_df.filter(F.col("search_term").isin(*terms))
-        .withColumn("week_start", F.lit(week_start))
-        .withColumn("week_end", F.lit(week_end))
-        .select(*FINAL_COLUMNS)
+    return melt_terms(wide, terms).select(
+        "country",
+        F.lit(week_start).alias("week_start"),
+        F.lit(week_end).alias("week_end"),
+        "search_term",
+        "interest",
     )
 
 
@@ -107,22 +112,36 @@ def filter_same_interest_countries(
     either — one per-partition sort instead of two, and one window pass
     per key group rather than per (key, value) group.
     """
-    marked = "__same_interest_marked"
-    kept = "__same_interest_kept"
+    return _keep_mixed_interest(df, n_terms, keys, value, term).drop(_MARKED, _KEPT)
+
+
+_MARKED = "__same_interest_marked"
+_KEPT = "__same_interest_kept"
+
+
+def _keep_mixed_interest(
+    df: DataFrame,
+    n_terms: int,
+    keys: tuple[str, ...] = ("country", "week_start"),
+    value: str = "interest",
+    term: str = "search_term",
+) -> DataFrame:
+    """``filter_same_interest_countries`` with its two window columns
+    (``_MARKED``, ``_KEPT``) left in place, for a caller whose next step is
+    a projection anyway — one analyzer pass fewer than dropping them."""
     by_value = (
         Window.partitionBy(*keys)
         .orderBy(F.col(value).desc())
         .rangeBetween(Window.currentRow, Window.currentRow)
     )
     by_key = Window.partitionBy(*keys)
-    keep = F.col(kept)
+    keep = F.col(_KEPT)
     for k in keys:
         keep &= F.col(k).isNotNull()
     return (
-        df.withColumn(marked, F.size(F.collect_set(term).over(by_value)) < n_terms)
-        .withColumn(kept, F.max(marked).over(by_key))
+        df.withColumn(_MARKED, F.size(F.collect_set(term).over(by_value)) < n_terms)
+        .withColumn(_KEPT, F.max(_MARKED).over(by_key))
         .filter(keep)
-        .drop(marked, kept)
     )
 
 
@@ -175,10 +194,9 @@ def trends_pipeline(
     one scan and one exchange: the rank window's
     ``hashpartitioning(country, week_start)`` and its sort on
     (country, week_start, interest DESC, ...) already satisfy both filter
-    windows, so they add neither an exchange nor a sort.
+    windows, so they add neither an exchange nor a sort. The drop's two
+    window columns are left to the final ``select``, which discards them.
     """
     long_df = transform_data(wide, week_start, week_end, terms)
-    ranked = filter_same_interest_countries(
-        rank_search_terms(long_df), n_terms=len(terms)
-    )
+    ranked = _keep_mixed_interest(rank_search_terms(long_df), len(terms))
     return ranked.select(*FINAL_COLUMNS, F.col("ranking").cast("int").alias("ranking"))

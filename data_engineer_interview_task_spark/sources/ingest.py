@@ -12,6 +12,16 @@ Schema is DECLARED, never inferred: inference reads the pandas dtypes,
 which float-ify integer columns containing NaN (the classic silent-schema
 drift) and vary by pandas version. A fixed ``LongType`` per term keeps the
 pipeline's output schema byte-stable across fetches.
+
+The matrix crosses to the JVM as a ``pyarrow.Table``, whatever the
+session's ``spark.sql.execution.arrow.pyspark.enabled`` says. A pandas
+frame handed to ``createDataFrame`` with that setting off is pickled row
+by row into a Python RDD (``Scan ExistingRDD``), so every scan of it starts
+Python workers, and its NaN cells fail the declared ``LongType``. An Arrow
+table below ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+default) becomes a ``LocalRelation`` (executed as ``LocalTableScan``);
+a larger one becomes an RDD of Arrow batches held in the JVM
+(``Scan ExistingRDD arrow``). Neither runs a Python worker.
 """
 
 from __future__ import annotations
@@ -46,12 +56,20 @@ def ingest_wide_matrix(
     the pandas INDEX (named ``geoName``) — or an already-reset frame with
     an explicit id column. Extra columns (e.g. pytrends' ``isPartial``)
     are dropped; missing term columns raise rather than silently emitting
-    nulls for a term the pipeline will rank.
+    nulls for a term the pipeline will rank. Rows with a missing id (None
+    or NaN) are dropped, as the reference's groupby (W:76) and ``isin``
+    (W:85) never keep them; the id field stays non-nullable.
+
+    The frame goes to Spark as a ``pyarrow.Table`` (module docstring), so
+    the result does not depend on the session's Arrow setting: NaN and
+    None become SQL NULL, and integers above 2^53 stay exact (Arrow's
+    pandas conversion keeps integer and object columns integral; the cast
+    to the declared ``LongType`` rejects non-integral floats).
 
     The result is a normal (tiny) DataFrame: downstream joins against it
     broadcast, and the 5-stage pipeline stays one lazy lineage from here.
     """
-    import pandas as pd
+    import pyarrow as pa
 
     if id_col not in pdf.columns:
         # countries live in the index (the raw interest_by_region shape)
@@ -60,13 +78,10 @@ def ingest_wide_matrix(
     missing = [t for t in terms if t not in pdf.columns]
     if missing:
         raise ValueError(f"wide matrix missing term columns: {missing}")
-    out = pdf[[id_col, *terms]].copy()
-    out[id_col] = out[id_col].astype(str)
-    for t in terms:
-        # nullable Int64 keeps NaN-bearing columns integral (plain astype
-        # would round-trip through float and change values > 2^53)
-        out[t] = pd.array(out[t], dtype="Int64")
-    return spark.createDataFrame(out, schema=wide_matrix_schema(terms, id_col))
+    out = pdf.loc[pdf[id_col].notna(), [id_col, *terms]]
+    out = out.assign(**{id_col: out[id_col].astype(str)})
+    table = pa.Table.from_pandas(out, preserve_index=False)
+    return spark.createDataFrame(table, schema=wide_matrix_schema(terms, id_col))
 
 
 def run_trends_ingest(

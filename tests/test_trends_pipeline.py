@@ -9,6 +9,8 @@ against real pandas:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -109,30 +111,49 @@ def test_partial_country_kept(spark):
     assert kept.count() == 2
 
 
+@contextmanager
+def _arrow_pyspark(spark, enabled: bool):
+    """Run the body with ``spark.sql.execution.arrow.pyspark.enabled`` set
+    to ``enabled``, restoring the session's value afterwards."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(enabled).lower())
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _pytrends_frame():
+    """The raw ``interest_by_region()`` shape: countries in an index named
+    geoName, a float term column with a NaN cell, and pytrends' isPartial."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "vpn": [37, 5, 80],
+            "hack": [37, 9, 60],
+            "cyber": [37, 5, 40],
+            "security": [37, 5, 20],
+            "wifi": [37.0, 5.0, float("nan")],
+            "isPartial": [False, False, True],
+        },
+        index=pd.Index(["AllSame37", "FourSame", "Plain"], name="geoName"),
+    )
+
+
 def test_ingest_wide_matrix_from_pytrends_shape(spark):
     """The live-ingestion seam (reference W:36-38 analog): a pandas frame
     in the raw interest_by_region shape — countries in a named index, an
     extra isPartial column, a NaN cell — promotes to the declared schema
     and runs the full pipeline to the same golden answers."""
-    import pandas as pd
-
     from data_engineer_interview_task_spark.sources import (
         ingest_wide_matrix,
         run_trends_ingest,
         wide_matrix_schema,
     )
 
-    pdf = pd.DataFrame(
-        {
-            "vpn": [37, 5, 80],
-            "hack": [37, 9, 60],
-            "cyber": [37, 5, 40],
-            "security": [37, 5, 20],
-            "wifi": [37.0, 5.0, float("nan")],  # float col w/ NaN: API shape
-            "isPartial": [False, False, True],  # pytrends noise column
-        },
-        index=pd.Index(["AllSame37", "FourSame", "Plain"], name="geoName"),
-    )
+    pdf = _pytrends_frame()
     wide = ingest_wide_matrix(spark, pdf)
     assert wide.schema == wide_matrix_schema()
     assert wide.count() == 3
@@ -160,6 +181,99 @@ def test_ingest_wide_matrix_missing_term_raises(spark):
     pdf = pd.DataFrame({"country": ["X"], "vpn": [1]})
     with _pytest.raises(ValueError, match="missing term columns"):
         ingest_wide_matrix(spark, pdf)
+
+
+def test_ingest_with_arrow_off_is_a_local_relation(spark):
+    """A session with Arrow off (the default without ``prep_session``)
+    still ingests a NaN-bearing matrix, keeps integers above 2^53 exact,
+    and executes it as a ``LocalTableScan`` — not a pickled Python RDD,
+    whose scan would start Python workers."""
+    import pandas as pd
+
+    from data_engineer_interview_task_spark.sources import ingest_wide_matrix
+
+    big = 2**53 + 1
+    pdf = pd.concat(
+        [
+            _pytrends_frame(),
+            pd.DataFrame(
+                {"vpn": [big], "hack": [1], "cyber": [2], "security": [3],
+                 "wifi": [4.0], "isPartial": [False]},
+                index=pd.Index(["Huge"], name="geoName"),
+            ),
+        ]
+    )
+    with _arrow_pyspark(spark, False):
+        wide = ingest_wide_matrix(spark, pdf)
+        got = {r.country: r for r in wide.collect()}
+        executed = wide._jdf.queryExecution().executedPlan().toString()
+    assert got["Plain"].wifi is None
+    assert got["Huge"].vpn == big
+    assert got["AllSame37"].wifi == 37
+    assert "LocalTableScan" in executed
+    assert "ExistingRDD" not in executed
+
+
+def test_missing_region_name_dropped_at_ingest(spark):
+    """A row whose region name is missing (None in the index, NaN in an id
+    column) never reaches the ranking, as the reference's groupby (W:76)
+    and ``isin`` (W:85) drop it: the output equals the run without it."""
+    import pandas as pd
+
+    from data_engineer_interview_task_spark.sources import run_trends_ingest
+
+    def rows(pdf):
+        return sorted(tuple(r) for r in run_trends_ingest(spark, pdf, *WEEK).collect())
+
+    clean = _pytrends_frame()
+    # a copy of the kept FourSame row, unnamed
+    unnamed = clean.iloc[[1]].set_axis(pd.Index([None], name="geoName"))
+    with_none = pd.concat([clean, unnamed])
+    with_nan = with_none.reset_index().rename(columns={"geoName": "country"})
+    with_nan.loc[3, "country"] = float("nan")
+    assert rows(with_none) == rows(with_nan) == rows(clean)
+
+
+def test_ingest_round_trips_pandas_values(spark):
+    """Property: integer, NaN and above-2^53 cells come back from
+    ``ingest_wide_matrix`` exactly (NaN as NULL), for index- and
+    column-shaped input, with Arrow on and with Arrow off."""
+    import pandas as pd
+    from hypothesis import given, settings, strategies as st
+
+    from data_engineer_interview_task_spark.sources import ingest_wide_matrix
+
+    terms = trends.DEFAULT_TERMS
+    cell = st.one_of(
+        st.none(), st.integers(0, 100), st.integers(2**53 + 1, 2**63 - 1)
+    )
+    matrix = st.lists(
+        st.tuples(*[cell] * len(terms)), min_size=1, max_size=6
+    )
+
+    def column(values):
+        # the dtype pandas would hold: int64 when complete, float64 with NaN
+        # when every value is exact as a float, else object
+        if all(v is not None for v in values):
+            return pd.Series(values, dtype="int64")
+        if all(v is None or v <= 2**53 for v in values):
+            return pd.Series([float("nan") if v is None else float(v) for v in values])
+        return pd.Series([float("nan") if v is None else v for v in values], dtype=object)
+
+    @given(matrix, st.booleans(), st.booleans())
+    @settings(max_examples=15, deadline=None)
+    def check(cells, index_shaped, arrow):
+        names = [f"r{i}" for i in range(len(cells))]
+        pdf = pd.DataFrame({t: column([row[j] for row in cells]) for j, t in enumerate(terms)})
+        if index_shaped:
+            pdf.index = pd.Index(names, name="geoName")
+        else:
+            pdf.insert(0, "country", names)
+        with _arrow_pyspark(spark, arrow):
+            got = sorted(tuple(r) for r in ingest_wide_matrix(spark, pdf).collect())
+        assert got == sorted((n, *row) for n, row in zip(names, cells))
+
+    check()
 
 
 def test_multi_week_frame_filters_each_week_as_its_own_run(spark):
